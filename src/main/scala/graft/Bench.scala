@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
  * prints one JSON line (driver contract).
@@ -20,7 +18,7 @@ import org.apache.spark.sql.SparkSession
  * should enable AQE for skew-join splitting and partition coalescing.
  *
  * Flagship floor (j2_role_playing_join, sf0.1): 0.235 s min-of-10 in
- * isolation (graft.tools.Probe), invariant across shuffle widths 4-16. The
+ * isolation (NOTES_r4), invariant across shuffle widths 4-16. The
  * plan is already the target shape — zero-Exchange ShuffledHashJoin on the
  * orderkey-co-partitioned cached fact tables, all four dims broadcast,
  * partial+final agg, coalesce(1) in place of a range-partitioned sort — so
@@ -32,7 +30,7 @@ import org.apache.spark.sql.SparkSession
  * multi-second 10× scaling queries.
  *
  * Skew-join floor (j_skew_salted, sf0.1): 0.52/0.54 s min-of-10 in
- * isolation (graft.tools.SkewAB, two quiet windows, loadavg 2.8/3.4),
+ * isolation (NOTES_r14, two quiet windows, loadavg 2.8/3.4),
  * with the full variant ladder pinning the attribution: targeted 0.52,
  * detection-free salting 0.28, blanket salting 0.26-0.30, plain join 0.26,
  * plain+SHJ 0.28-0.32 (result sets machine-checked equal across variants
@@ -63,22 +61,7 @@ object Bench {
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", math.min(cpus.toInt, 16).toString)
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      // Latency trims for sub-second stages over megabyte-scale data: codec
-      // startup per shuffle block costs more than the bytes it saves, both
-      // on the shuffle path and in the cached-table columnar store.
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.broadcast.compress", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, shufflePartitions.toInt, aqe.toBoolean)
 
     // Prepared-statement model: each query's DataFrame (analysis +
     // optimization + physical planning) is built ONCE; timed passes measure
@@ -98,8 +81,14 @@ object Bench {
       case Some(o) => SparkEntry.queries.filter { case (n, _) => o(n) }
       case None => SparkEntry.queries
     }
+    // query → "ErrorClass: message" of its latest failure (prepare, warmup
+    // or timed run); a later success clears the entry, so at the end its
+    // keys are exactly the failed queries
+    val errors = scala.collection.mutable.Map.empty[String, String]
     val prepared = selected.map { case (name, fn) =>
-      name -> (try Some(fn(spark, sfDir)) catch { case _: Throwable => None })
+      name -> (try Some(fn(spark, sfDir)) catch { case t: Throwable =>
+        errors(name) = t.toString; None
+      })
     }
 
     // Timed action: the noop sink, NOT count(). count() lets Catalyst prune
@@ -113,8 +102,8 @@ object Bench {
       df.write.format("noop").mode("overwrite").save()
 
     // warmup pass (untimed): JIT, codegen cache, table buffer pool, broadcasts
-    prepared.foreach { case (_, df) =>
-      try df.foreach(run) catch { case _: Throwable => () }
+    prepared.foreach { case (name, df) =>
+      try df.foreach(run) catch { case t: Throwable => errors(name) = t.toString }
     }
 
     // Timed: 5 interleaved passes over the whole query set, min per query.
@@ -125,7 +114,6 @@ object Bench {
     // asks for (BASELINE.md §d).
     val names = selected.keys.toSeq
     val times = scala.collection.mutable.Map.empty[String, Double]
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     for (pass <- 1 to 5) {
       // derived results (sketch frames) recompute fresh in every pass;
       // the input-table buffer pool stays warm (BASELINE.md §d methodology)
@@ -137,19 +125,17 @@ object Bench {
         val skip = pass > 2 && times.get(name).exists(_ >= 5.0)
         if (!skip) {
           val t0 = System.nanoTime()
-          val ok = try {
-            prepared(name) match {
-              case Some(df) => run(df); true
-              case None => failed += name; false
-            }
-          } catch { case _: Throwable => failed += name; false }
+          val ok = prepared(name).exists { df =>
+            try { run(df); true }
+            catch { case t: Throwable => errors(name) = t.toString; false }
+          }
           val t = (System.nanoTime() - t0) / 1e9
           // a crash-path timing is not a latency — only record successes;
           // a later success also CLEARS the failed mark (r11 review: a
           // transient pass-1 error left the query in BOTH failed:[…] and
           // queries:{…} with a valid min — contradictory output)
           if (ok) {
-            failed -= name
+            errors -= name
             if (!times.contains(name) || t < times(name)) times(name) = t
           }
         }
@@ -159,6 +145,7 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = names.filter(errors.contains)
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // 1-min loadavg: this container shares a host with heavy CPU steal and
     // totals swing ~2× with it (NOTES_r2) — stamp the load so any reader can
@@ -167,22 +154,25 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
     } catch { case _: Throwable => -1.0 }
-    // escape the interpolated path like Verify does (r11 review): a quote
-    // or backslash in SPARK_GRAFT_SF_DIR would otherwise emit invalid JSON
-    // and lose the round's timings to the driver's json.load
-    val sfJson = "\"" + sfDir.flatMap {
+    // escape interpolated strings like Verify does (r11 review): a quote
+    // or backslash in SPARK_GRAFT_SF_DIR or an error message would otherwise
+    // emit invalid JSON and lose the round's timings to the driver's json.load
+    def jsonStr(v: String): String = "\"" + v.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    val sfJson = jsonStr(sfDir)
+    val errorsJson = failed.map(n => jsonStr(n) + ":" + jsonStr(errors(n)))
+      .mkString("{", ",", "}")
     // cpus + shuffle width stamped into the line (r14 verdict item 2): the
     // driver's low-core run could not VERIFY that SPARK_GRAFT_CPUS takes
     // effect (every sf0.1 ratio ≈ 1 — fixed-cost-bound rows) and flagged
     // suspect_cpus_ignored; the stamp plus the x_scaling_probe row make the
     // parallelism signal checkable from the parsed line alone.
     val jsonLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":${cpus.toInt},"shuffle_partitions":${shufflePartitions.toInt},"queries":$qs,"failed":$failedJson,"sf":$sfJson,"loadavg1":$load1}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":${cpus.toInt},"shuffle_partitions":${shufflePartitions.toInt},"queries":$qs,"failed":$failedJson,"errors":$errorsJson,"sf":$sfJson,"loadavg1":$load1}"""
     // The driver records only the LAST 2000 characters of stdout and tries
     // to parse one JSON line out of that tail (BENCH_r01..r13 all carry
     // `"tail": <2000 chars>, "parsed": null` — the full 128-query line is

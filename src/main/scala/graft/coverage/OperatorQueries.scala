@@ -245,9 +245,9 @@ object OperatorQueries {
    * S7/J11: incremental-load anti-join dedup — `incoming NOT IN existing`.
    * Existing keys = every third event. left_anti (NOT EXISTS) ≡ NOT IN
    * here because the generated `event_id` is a NON-NULL long on both sides
-   * (no guard column needed — r11 review fixed this comment, which claimed
-   * one existed); the loader's exact null-hostile NOT-IN mode for dirty
-   * keys is [[graft.ingest.RawLoader]]'s (SURVEY §2.1 S7 note).
+   * (no guard column needed). On dirty keys the two differ: a NULL existing
+   * key makes NOT IN load nothing, while [[graft.ingest.RawLoader]] keeps
+   * NOT EXISTS (SURVEY §2.1 S7 note).
    */
   def s7AntiJoinDedup(s: SparkSession, dir: String): DataFrame = {
     val events = T(s, dir, "events")

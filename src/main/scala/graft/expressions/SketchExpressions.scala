@@ -840,9 +840,10 @@ case class NormalizeVectorExpr(child: Expression)
  * spec (ShinglesExprSpec pins both on the corner fixtures).
  *
  * Why (r14 optimization round): shingling is the shared leading cost of
- * every sketch query — MicroAB measured the HOF chain at 0.6 s of the 0.8 s
- * tokens→shingles step over the 55k-doc corpus (vs ~0.05 s for the md5/
- * xxhash64 hashing it feeds), because each of the ~n shingles pays an
+ * every sketch query — a stagewise A/B (OPTIMIZATION_r14) measured the HOF
+ * chain at 0.6 s of the 0.8 s tokens→shingles step over the 55k-doc
+ * corpus (vs ~0.05 s for the md5/xxhash64 hashing it feeds), because each
+ * of the ~n shingles pays an
  * interpreted lambda walk, a `slice` array allocation, and a generic
  * `concat_ws` dispatch, then `array_distinct` re-walks the result. One
  * imperative loop with a LinkedHashSet does the same work in O(total

@@ -31,29 +31,14 @@ object RawLoader {
     bronze.withColumn("ingestion_timestamp", current_timestamp())
 
   /**
-   * Rows of `incoming` whose event_id is not already present in `existing`.
-   * The reference's NOT IN becomes: if ANY existing event_id is NULL, nothing
-   * loads (null-hostile three-valued logic) — reproduced via the crossJoin
-   * guard only when an exact NOT IN is demanded; by default we use the sane
-   * NOT EXISTS (left_anti), identical on all non-corrupt data.
+   * Rows of `incoming` whose event_id is not already present in `existing`:
+   * NOT EXISTS (left_anti), so a NULL key in `existing` blocks nothing. The
+   * reference's NOT IN would load zero rows in that case (null-hostile
+   * three-valued logic); the two agree on all non-corrupt data.
    */
-  def dedupAgainst(incoming: DataFrame, existing: DataFrame,
-                   exactNotIn: Boolean = false): DataFrame = {
-    val existingKeys = existing.select("event_id")
-    if (!exactNotIn)
-      incoming.join(existingKeys.filter(col("event_id").isNotNull),
-        Seq("event_id"), "left_anti")
-    else {
-      // NOT IN: empty result if any NULL key exists in `existing`.
-      val hasNull = broadcast(
-        existingKeys.agg(max(col("event_id").isNull).as("has_null")))
-      incoming
-        .join(existingKeys.filter(col("event_id").isNotNull), Seq("event_id"), "left_anti")
-        .crossJoin(hasNull)
-        .filter(!coalesce(col("has_null"), lit(false)))
-        .drop("has_null")
-    }
-  }
+  def dedupAgainst(incoming: DataFrame, existing: DataFrame): DataFrame =
+    incoming.join(existing.select("event_id").filter(col("event_id").isNotNull),
+      Seq("event_id"), "left_anti")
 
   /**
    * Full incremental load: create-or-append into a parquet table directory.

@@ -348,7 +348,7 @@ object Dedup {
     * oracles replay in SQL). The HOF chain pays an interpreted lambda +
     * slice allocation + generic concat_ws per shingle plus an
     * array_distinct re-walk — measured as the leading cost of every sketch
-    * query (MicroAB, r14). */
+    * query (OPTIMIZATION_r14). */
   private[graft] def shinglesOfTokensHof(toks: Column, k: Int = 3): Column =
     array_distinct(transform(
       sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
@@ -368,10 +368,6 @@ object Dedup {
   def minhashSignatureOfShingles(sh: Column, numHashes: Int = 64): Column =
     graft.expressions.SketchExpressions.minhash_signature(
       graft.expressions.SketchExpressions.xxhash64_array(sh), numHashes)
-
-  /** MinHash signature from raw text (convenience; one shingle pass). */
-  def minhashSignature(text: Column, numHashes: Int = 64): Column =
-    minhashSignatureOfShingles(shingles(text), numHashes)
 
   /**
    * MinHash LSH candidate pairs: band the signature (bands × rowsPerBand =

@@ -7,15 +7,13 @@ import org.apache.spark.sql.functions._
  * dbt's four generic schema-test kinds as reusable DataFrame assertions, run
  * post-transform — the Spark analogue of `dbt test` over
  * `logistics_pipeline/models/layer/schema.yml` (40+ declared tests).
+ * `not_null` has no standalone function: [[suite]] folds every not_null
+ * column of a model into one aggregate pass.
  *
  * Each test returns the VIOLATION COUNT (dbt's convention: a test passes iff
  * its compiled SELECT returns zero rows).
  */
 object DbtStyleTests {
-
-  /** `not_null` — rows where the column is null. */
-  def notNull(df: DataFrame, column: String): Long =
-    df.filter(col(column).isNull).count()
 
   /** `unique` — number of duplicated non-null key values. */
   def unique(df: DataFrame, column: String): Long =

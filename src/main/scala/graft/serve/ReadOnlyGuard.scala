@@ -77,7 +77,7 @@ object ReadOnlyGuard {
       Collections.newSetFromMap(new java.util.WeakHashMap[AnyRef, java.lang.Boolean]()))
 
   /** Was `session`'s analyzer built with the guard installed? ConnectServe
-    * fails fast on start(readOnly=true) when the engine session — the one
+    * fails fast on start() when the engine session — the one
     * Connect clones client sessions from — cannot enforce. */
   def isCapable(session: SparkSession): Boolean = capable.contains(session)
 
@@ -163,8 +163,7 @@ object ReadOnlyGuard {
               "endpoint mirrors the reference dashboards' " +
               "duckdb.connect(read_only=True) contract; only queries, " +
               "EXPLAIN/SHOW/DESCRIBE/SET, and session-local temp views are " +
-              "permitted. Start the endpoint with readOnly=false for a " +
-              "trusted full-capability client.")
+              "permitted.")
         }
       }
   }

@@ -196,25 +196,21 @@ object EventStreamIngest {
 
   /**
    * Bronze sink: parquet + checkpoint, partitioned by ingest date/hour.
-   * `availableNow = true` reproduces the Airflow-style bounded drain: process
-   * everything pending, then stop.
+   * The `AvailableNow` trigger reproduces the Airflow-style bounded drain:
+   * process everything pending, then stop.
    */
-  def bronzeSink(events: DataFrame, outDir: String, checkpointDir: String,
-                 availableNow: Boolean = true,
-                 processingInterval: String = "1 second"): StreamingQuery = {
+  def bronzeSink(events: DataFrame, outDir: String,
+                 checkpointDir: String): StreamingQuery = {
     val stamped = events
       .withColumn("ingestion_timestamp", current_timestamp())
       .withColumn("ingest_date", to_date(col("ingestion_timestamp")))
       .withColumn("ingest_hour", hour(col("ingestion_timestamp")))
-    val trigger =
-      if (availableNow) Trigger.AvailableNow()
-      else Trigger.ProcessingTime(processingInterval)
     stamped.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .partitionBy("ingest_date", "ingest_hour")
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 

@@ -65,9 +65,8 @@ object StatefulOps {
     }
   }
 
-  /** Pure per-(key, batch) fold — the SEMANTICS, shared by the v1
-    * (`flatMapGroupsWithState`) and v2 (`transformWithState`,
-    * [[StatefulOpsV2]]) processors so the two APIs cannot drift: sort the
+  /** Pure per-(key, batch) fold — the SEMANTICS of [[orderProgress]],
+    * kept free of Spark state so `AdvancePropertySpec` can drive it: sort the
     * batch in (timestamp, event_id) lexicographic-ISO order (SURVEY §1.4),
     * advance the stored state, emit one update. None for an empty batch. */
   private[streaming] def advance(orderId: String, prev: OrderState,

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-dump helper for the optimization rounds: writes each declared
@@ -9,8 +8,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * so before/after plan shapes can be committed and diffed.
   *
   * Usage: PlanDump <outDir> <tag> [query ...]   (no queries → all).
-  * Session config mirrors Bench (AQE off, bench shuffle width) so the
-  * dumped plan is the one the bench actually executes.
+  * Same session policy ([[graft.Sessions]]), AQE default and shuffle-width
+  * rule as Bench, so the dumped plan is the one the bench actually executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,16 +20,8 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
       math.min(cpus.toInt, 16).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus.toInt, shuffle.toInt,
+      sys.env.getOrElse("SPARK_GRAFT_AQE", "false").toBoolean)
     Files.createDirectories(Paths.get(outDir))
     val names =
       if (args.length > 2) args.drop(2).toSeq

@@ -8,7 +8,10 @@
 #   2. the FAST execution-config parity tier (AqeParitySpec, 18
 #      representative queries x 3 configs — the full 116-query sweep runs
 #      with GRAFT_FULL_PARITY=true once per round / on the final binary),
-#   3. graft.Verify at sf0.01 + the DuckDB oracle compare (the real gate).
+#   3. a compile of the pipeline benchmark (perfbench/build.py) into a
+#      throwaway directory: it builds against src/main APIs, so a signature
+#      change there would otherwise surface only at benchmark time,
+#   4. graft.Verify at sf0.01 + the DuckDB oracle compare (the real gate).
 #
 # Total ~10 min on this host. (Since r11 the FULL battery is also cheap —
 # ~3-5 min wall via parallel suite groups — so `sbt test` is a reasonable
@@ -22,10 +25,15 @@ for s in "${SUITES[@]:-}"; do
   [[ -n "$s" ]] && TESTONLY="$TESTONLY $s"
 done
 
-echo "== 1+2/3: targeted suites + fast parity tier =="
+echo "== 1+2/4: targeted suites + fast parity tier =="
 sbt -batch "testOnly $TESTONLY"
 
-echo "== 3/3: Verify sf0.01 + oracle compare =="
+echo "== 3/4: pipeline benchmark compiles against src/main =="
+BENCH_BUILD=$(mktemp -d)
+python3 perfbench/build.py "$BENCH_BUILD"
+rm -rf "$BENCH_BUILD"
+
+echo "== 4/4: Verify sf0.01 + oracle compare =="
 OUT=$(mktemp -d /tmp/graft_precommit.XXXXXX)
 ./run-main.sh graft.Verify /root/testdata/sf0.01 "$OUT" >/dev/null 2>&1
 python3 tools/compare_oracle.py /root/testdata/sf0.01 "$OUT" | tail -2
