@@ -1734,7 +1734,9 @@ object LlmOpQueries {
       .select(col("doc_id"), explode(sequence(lit(1), lit(2048))).as("i"))
       .select(h.as("h"))
       .agg(count(lit(1)).as("n_hashes"),
-        sum(col("h")).as("checksum"),   // < 2^16 per row: no overflow at any SF
+        // h < 2^16, so a document adds at most 2048 * 65535 ≈ 1.3e8: the
+        // signed 64-bit sum overflows only past ~6.9e10 documents
+        sum(col("h")).as("checksum"),
         max(col("h")).as("max_h"))
   }
 }

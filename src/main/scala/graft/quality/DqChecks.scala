@@ -12,9 +12,9 @@ import graft.model.LogisticsEvent
  * pipeline proceeds). The reference signals via process exit code; we raise
  * `DqGateFailure` carrying the per-check counts.
  *
- * Each check is a pushed-down filter + count over the bronze scan. At scale
- * all seven run in ONE job via `runAll` (a single conditional-aggregation
- * pass) rather than seven scans — semantics identical, 7× less I/O.
+ * Each check is a row predicate counted over the raw scan, except check 6,
+ * dbt's `unique` test. `runAll` counts all six predicates in ONE aggregate
+ * pass rather than six scans; both counting shapes live in [[DbtStyleTests]].
  */
 object DqChecks {
 
@@ -59,10 +59,7 @@ object DqChecks {
   def outOfBoundsCoords(raw: DataFrame): Long = raw.filter(oobCoordPred).count()
 
   /** Check 6 (WARNING): duplicate event_ids (`data_quality_check.py:157-173`). */
-  def duplicateEventIds(raw: DataFrame): Long =
-    raw.filter(col("event_id").isNotNull)
-      .groupBy("event_id").agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).count()
+  def duplicateEventIds(raw: DataFrame): Long = DbtStyleTests.unique(raw, "event_id")
 
   /** Check 7 (WARNING): estimated_delivery unparseable or in the past (`data_quality_check.py:177-189`). */
   private val tryDeliveryDate = expr("try_cast(estimated_delivery AS DATE)")
@@ -72,31 +69,23 @@ object DqChecks {
     raw.filter(badDeliveryPred).count()
 
   /**
-   * All seven checks in a single scan (conditional aggregation), plus the
-   * duplicate check (needs its own groupBy). Throws `DqGateFailure`, which
-   * carries every check's result, when any ERROR-severity count is nonzero,
-   * mirroring `sys.exit(1)` at `data_quality_check.py:197-200`.
+   * All seven checks: the six row predicates in a single scan, plus the
+   * duplicate check (needs its own groupBy). Throws `DqGateFailure`, which carries every check's result,
+   * when any ERROR-severity count is nonzero, mirroring `sys.exit(1)` at
+   * `data_quality_check.py:197-200`.
    */
   def runAll(raw: DataFrame): Seq[CheckResult] = {
-    def cnt(pred: org.apache.spark.sql.Column) = // coalesce: sum of 0 rows is null
-      coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
-    val row = raw.agg(
-      cnt(nullIdPred).as("null_ids"),
-      cnt(badWeightPred).as("bad_weights"),
-      cnt(malformedTsPred).as("malformed_ts"),
-      cnt(invalidStatusPred).as("bad_status"),
-      cnt(oobCoordPred).as("bad_coords"),
-      cnt(badDeliveryPred).as("bad_delivery")
-    ).head()
-
+    val Seq(nullIds, badWeights, malformedTs, badStatuses, badCoords, badDelivery) =
+      DbtStyleTests.countRows(raw, Seq(nullIdPred, badWeightPred, malformedTsPred,
+        invalidStatusPred, oobCoordPred, badDeliveryPred))
     val results = Seq(
-      CheckResult("null_ids", "ERROR", row.getAs[Long]("null_ids")),
-      CheckResult("bad_weights", "ERROR", row.getAs[Long]("bad_weights")),
-      CheckResult("malformed_timestamps", "ERROR", row.getAs[Long]("malformed_ts")),
-      CheckResult("invalid_statuses", "ERROR", row.getAs[Long]("bad_status")),
-      CheckResult("out_of_bounds_coords", "ERROR", row.getAs[Long]("bad_coords")),
+      CheckResult("null_ids", "ERROR", nullIds),
+      CheckResult("bad_weights", "ERROR", badWeights),
+      CheckResult("malformed_timestamps", "ERROR", malformedTs),
+      CheckResult("invalid_statuses", "ERROR", badStatuses),
+      CheckResult("out_of_bounds_coords", "ERROR", badCoords),
       CheckResult("duplicate_event_ids", "WARNING", duplicateEventIds(raw)),
-      CheckResult("bad_delivery_dates", "WARNING", row.getAs[Long]("bad_delivery")))
+      CheckResult("bad_delivery_dates", "WARNING", badDelivery))
 
     if (results.exists(r => r.severity == "ERROR" && r.violations > 0))
       throw DqGateFailure(results)

@@ -4,6 +4,8 @@ import graft.SparkSuite
 import graft.model.LogisticsEvent
 import graft.quality.DqChecks
 import java.nio.file.Files
+import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Full-DAG drive: landing files → stream drain → load → DQ gate → models → tests. */
 class PipelineSpec extends SparkSuite {
@@ -34,10 +36,10 @@ class PipelineSpec extends SparkSuite {
     assert(r.dqResults.forall(c => c.severity != "ERROR" || c.violations == 0))
     assert(r.warehouse.factEvent.count() == 60)
     assert(r.testsPassed, s"failing: ${r.testResults.filterNot(_.passed)}")
+    assertNothingCached(r)
 
     // serving path: registered views answer SQL (§3.3)
-    val n = Pipeline.query(spark,
-      "SELECT count(*) AS n FROM fact_event").head().getLong(0)
+    val n = spark.sql("SELECT count(*) AS n FROM fact_event").head().getLong(0)
     assert(n == 60)
 
     // second run with one new batch + replayed events: only new rows load
@@ -45,7 +47,19 @@ class PipelineSpec extends SparkSuite {
     val r2 = Pipeline.run(spark, s"$tmp/landing", s"$tmp/bronze",
       s"$tmp/ckpt", s"$tmp/raw")
     assert(r2.newRawRows == 10)   // 55-60 deduped by the anti-join
+    assertNothingCached(r2)
+    assert(r2.warehouse.factEvent.count() == 70)
+    assert(r2.testsPassed, s"failing: ${r2.testResults.filterNot(_.passed)}")
   }
+
+  // The stg/valid cache that Warehouse.fromRaw(cacheShared = true) registers
+  // is released only by the test suite's unpersist of the same frames. Were
+  // it to outlive a run, the next run's identical plan over the same raw
+  // directory could be answered from the stale cache.
+  private def assertNothingCached(r: Pipeline.RunResult): Unit =
+    r.warehouse.productIterator.foreach { case df: Dataset[_] =>
+      assert(df.storageLevel == StorageLevel.NONE)
+    }
 
   test("serve stage: dashboards attach over the wire, read-only enforced") {
     import graft.serve.ConnectServe

@@ -64,6 +64,7 @@ class DqChecksSpec extends SparkSuite {
     assert(all("malformed_timestamps") == DqChecks.malformedTimestamps(raw))
     assert(all("invalid_statuses") == DqChecks.invalidStatuses(raw))
     assert(all("out_of_bounds_coords") == DqChecks.outOfBoundsCoords(raw))
+    assert(all("duplicate_event_ids") == DqChecks.duplicateEventIds(raw))
     assert(all("bad_delivery_dates") == DqChecks.badDeliveryDates(raw))
   }
 
